@@ -103,11 +103,12 @@ def is_hash_same(lsh_a: int, lsh_b: int) -> bool:
 
 def content_hash_signed(body) -> int:
     """Fingerprint as a signed 64-bit int for LongType storage, with 0
-    remapped to 1: the storage layer reserves 0 as the 'absent' sentinel
-    (nullable int64 decays to float64 through Arrow→pandas and corrupts
-    hashes), and an empty/all-markup body legitimately hashes to 0.  The
-    remap costs hamming distance ≤1 — well inside the <4 same-document
-    band, so retention decisions are unaffected."""
+    remapped to 1.  An empty/all-markup body legitimately hashes to 0;
+    the remap is kept because every stored ``lsh64`` value and the gate
+    hashes computed over them were produced with it, so dropping it
+    would change persisted crawl data.  The remap costs hamming
+    distance ≤1 — well inside the <4 same-document band, so retention
+    decisions are unaffected."""
     h = content_hash(body)
     if h == 0:
         h = 1

@@ -17,17 +17,21 @@ DomainCrawlSession by up to ``wave_budget`` fetches.  Domains never link
 to each other inside a job (the reference's key invariant — cp/readme.md
 §1), so the grouping key ``domain`` makes the whole crawl embarrassingly
 parallel: the only shuffles are the cogroup hash-partitioning per wave,
-exactly one wide stage.
+exactly one wide stage.  The wave UDF is Arrow-native
+(``cogroup(...).applyInArrow``): it reads its slices as Python records
+and returns typed Arrow columns, with no pandas frame on either side.
 
 Each wave boundary is an atomic snapshot commit (plans/checkpoints.py) —
 kill the driver at any point and ``resume()`` continues from the last
 committed wave with identical results (tested).
 
 Scale notes (10^10-URL frontier / 1000 executors):
-- frontier and the wave cogroup hash-partition on ``domain``; AQE splits
-  skewed partitions; the ``bucket`` column (xxhash64(domain) % n_buckets)
-  is the Iceberg partition spec so a wave's COW replace only rewrites
-  dirty buckets;
+- frontier and the wave cogroup hash-partition on ``domain``.  Skew is
+  bounded by the per-domain cap below, not by AQE: AQE's skew split
+  applies only to joins, never to a cogroup, and ``run_waves`` turns AQE
+  off for the wave jobs.  The ``bucket`` column (xxhash64(domain) %
+  n_buckets) is the Iceberg partition spec, so a wave's COW replace only
+  rewrites dirty buckets;
 - per-domain state is bounded by the reference's own frontier cap
   (depth + 10_000 rows — DomainCrawlFrontier.java:167-169), so a group
   never exceeds ~20k rows no matter how large the site;
@@ -44,9 +48,11 @@ import sys
 from typing import Optional
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..oracle.session import DomainCrawlSession, DomainInfo
 from ..sources.synthetic_web import DomainPagesWeb
@@ -104,50 +110,56 @@ WAVE_OUT_SCHEMA = T.StructType(
     ]
 )
 
-_OUT_COLS = [f.name for f in WAVE_OUT_SCHEMA.fields]
+# the wave_out views and the compaction read ``wave`` and ``row_kind`` as
+# Hive-style partition columns
+WAVE_LOG_SCHEMA = T.StructType(
+    WAVE_OUT_SCHEMA.fields + [T.StructField("wave", T.IntegerType())]
+)
+
+DOMAIN_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("domain", T.StringType()),
+        T.StructField("top_domain", T.StringType()),
+        T.StructField("info_json", T.StringType()),
+        T.StructField("phase", T.StringType()),
+        T.StructField("state_json", T.StringType()),
+    ]
+)
+
+# one frontier bucket's files (the bucket id is the directory, not a column)
+FRONTIER_SCHEMA = T.StructType(
+    [
+        T.StructField("domain", T.StringType()),
+        T.StructField("url_hash", T.LongType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("state", T.StringType()),
+    ]
+)
+
+_ARROW_OUT = to_arrow_schema(WAVE_OUT_SCHEMA)
 
 
-def _row(row_kind: str, domain: str, **kw) -> dict:
-    base = {c: None for c in _OUT_COLS}
-    base["row_kind"] = row_kind
-    base["domain"] = domain
-    base.update(kw)
-    return base
-
-
-_INT64_COLS = ("url_hash", "seq", "virtual_ms", "idx", "phash", "lsh64", "timestamp")
-_INT32_COLS = ("http_status", "psnr_ok", "has_cookies", "request_time_ms")
-
-
-def _assemble_out(domain: str, blocks: list) -> pd.DataFrame:
-    """Columnar wave-output builder: each block is (n_rows, {col: list |
-    scalar}) for one homogeneous row kind; absent columns fill with
-    nulls.  Replaces the per-row 25-key dict assembly (measured ~2/3 of
-    the whole wave UDF wall at 512 domains — guide §1.2 step 2, per-task
-    work).  Int columns go straight to pandas nullable Int64/Int32 so a
-    null can never decay the column to float64 and corrupt 64-bit
-    hashes — the same invariant the old dtype=object + astype path
-    enforced, minus the object detour."""
-    data = {}
-    for c in _OUT_COLS:
-        vals: list = []
-        for cnt, cols in blocks:
-            v = cols.get(c)
-            if v is None:
-                vals.extend([None] * cnt)
-            elif isinstance(v, (list, range)):
-                vals.extend(v)
-            else:
-                vals.extend([v] * cnt)
-        if c == "domain":
-            data[c] = pd.Series([domain] * sum(b[0] for b in blocks), dtype=object)
-        elif c in _INT64_COLS:
-            data[c] = pd.array(vals, dtype="Int64")
-        elif c in _INT32_COLS:
-            data[c] = pd.array(vals, dtype="Int32")
+def _out_table(domain: str, blocks: list) -> pa.Table:
+    """One domain's wave output, built column by column: each block is
+    (n_rows, {col: list | range | scalar}) for one homogeneous row kind;
+    absent columns fill with nulls.  Every column is a typed Arrow array,
+    so a null int64 stays a null and 64-bit hashes keep every bit."""
+    n = sum(cnt for cnt, _ in blocks)
+    arrays = []
+    for field in _ARROW_OUT:
+        if field.name == "domain":
+            vals = [domain] * n
         else:
-            data[c] = pd.Series(vals, dtype=object)
-    return pd.DataFrame(data, columns=_OUT_COLS)
+            vals = []
+            for cnt, cols in blocks:
+                v = cols.get(field.name)
+                if isinstance(v, (list, range)):
+                    vals.extend(v)
+                else:
+                    vals.extend([v] * cnt)
+        arrays.append(pa.array(vals, field.type))
+    return pa.Table.from_arrays(arrays, schema=_ARROW_OUT)
 
 
 def _schedule_offsets(durations: list[tuple[str, int]], permits: int) -> dict[str, int]:
@@ -185,31 +197,24 @@ def _make_wave_fn(
     fails the whole wave task (the reference likewise catches per-domain
     exceptions in CrawlTask — CrawlerMain.java:700-716)."""
 
-    def wave_fn(state_pdf: pd.DataFrame, pages_pdf: pd.DataFrame) -> pd.DataFrame:
+    def wave_fn(state: pa.Table, pages: pa.Table) -> pa.Table:
+        rows = state.to_pylist()
         try:
-            return _wave_fn_inner(state_pdf, pages_pdf)
+            return _wave_fn_inner(rows, pages)
         except Exception as ex:  # noqa: BLE001 — per-domain fault barrier
-            ds_rows = state_pdf[state_pdf.row_kind == "domain_state"]
-            domain = ds_rows["domain"].iloc[0] if not ds_rows.empty else "?"
-            err = json.dumps({"phase": "error", "exception": repr(ex)[:500]})
-            pdf = pd.DataFrame(
-                [_row("domain_state", domain, state="error", state_json=err)],
-                columns=_OUT_COLS,
-                dtype=object,
+            domain = next(
+                (r["domain"] for r in rows if r["row_kind"] == "domain_state"), "?"
             )
-            for col in ("url_hash", "seq", "virtual_ms", "idx"):
-                pdf[col] = pdf[col].astype("Int64")
-            pdf["http_status"] = pdf["http_status"].astype("Int32")
-            return pdf
+            err = json.dumps({"phase": "error", "exception": repr(ex)[:500]})
+            return _out_table(
+                domain,
+                [(1, {"row_kind": "domain_state", "state": "error", "state_json": err})],
+            )
 
-    def _wave_fn_inner(state_pdf: pd.DataFrame, pages_pdf: pd.DataFrame) -> pd.DataFrame:
-        if state_pdf.empty:
-            return pd.DataFrame(columns=_OUT_COLS)
-
-        ds_rows = state_pdf[state_pdf.row_kind == "domain_state"]
-        if ds_rows.empty:
-            return pd.DataFrame(columns=_OUT_COLS)
-        ds = ds_rows.iloc[0]
+    def _wave_fn_inner(rows: list, pages: pa.Table) -> pa.Table:
+        ds = next((r for r in rows if r["row_kind"] == "domain_state"), None)
+        if ds is None:
+            return _ARROW_OUT.empty_table()
         domain = ds["domain"]
         info_d = json.loads(ds["info_json"])
         info = DomainInfo(
@@ -228,46 +233,38 @@ def _make_wave_fn(
         if transport is not None and transport.get("kind") == "http":
             # REAL-SOCKET transport (sources/httpweb.py): the executor's
             # Python worker opens live HTTP connections instead of reading
-            # the cogrouped pandas slice; pages_pdf degenerates to routing
-            # ballast (pass an empty pages DF to run_waves in this mode).
-            # tests/test_httpweb_engine.py proves the wave outputs are
-            # byte-identical to the pandas transport on the same web.
+            # the cogrouped pages slice; the pages side degenerates to
+            # routing ballast (pass an empty pages DF to run_waves in this
+            # mode).  tests/test_httpweb_engine.py proves the wave outputs
+            # are byte-identical to the in-table transport on the same web.
             from ..sources.httpweb import HttpWeb
 
             web = HttpWeb(
                 transport["ports"], host=transport.get("host", "127.0.0.1")
             )
         else:
-            web = DomainPagesWeb(domain, info.proto, pages_pdf)
+            web = DomainPagesWeb(domain, info.proto, pages.to_pylist())
+
+        def _kind(kind: str) -> list:
+            return [r for r in rows if r["row_kind"] == kind]
 
         state_json = ds["state_json"]
-        if state_json is None or (isinstance(state_json, float)):
+        if state_json is None:
             # fresh domain: setup (+ recrawl replay if prev data present)
             # replay order = stored order (the reference iterates the prior
             # Slop table sequentially); `seq` carries the position
-            prev_rows = state_pdf[state_pdf.row_kind == "prev_crawl"].sort_values("seq")
-            if not prev_rows.empty:
-                pr = prev_rows[
-                    ["url", "http_status", "image_id", "etag", "last_modified", "lsh64"]
-                ].copy()
-                pr["http_status"] = pr["http_status"].astype(int)
-                # NaN (pandas null) → None so the session sees real absent tags
-                pr = pr.astype(object).where(pd.notnull(pr), None)
-                # lsh64 travels as a never-null long (sentinel 0 = absent) so
-                # Arrow→pandas cannot decay it to float64 and corrupt the bits
-                prev = [
-                    {
-                        **r,
-                        "lsh64": (
-                            int(r["lsh64"]) if r["lsh64"] not in (None, 0) else None
-                        ),
-                    }
-                    for r in pr.to_dict("records")
-                ]
-            else:
-                prev = None
-            atag_rows = state_pdf[state_pdf.row_kind == "atag"].sort_values("seq")
-            atags = atag_rows["url"].tolist() if not atag_rows.empty else None
+            prev = [
+                {
+                    "url": r["url"],
+                    "http_status": int(r["http_status"]),
+                    "image_id": r["image_id"],
+                    "etag": r["etag"],
+                    "last_modified": r["last_modified"],
+                    "lsh64": r["lsh64"],
+                }
+                for r in sorted(_kind("prev_crawl"), key=lambda r: r["seq"])
+            ]
+            atags = [r["url"] for r in sorted(_kind("atag"), key=lambda r: r["seq"])]
             sess = DomainCrawlSession(
                 info,
                 web,
@@ -275,10 +272,9 @@ def _make_wave_fn(
                 validate_payload=validate_payload,
                 **({"body_cap_bytes": body_cap_bytes} if body_cap_bytes else {}),
             )
-            phase = sess.setup(prev_crawl=prev, atag_urls=atags)
+            phase = sess.setup(prev_crawl=prev or None, atag_urls=atags or None)
         else:
-            fr = state_pdf[state_pdf.row_kind == "frontier"]
-            frontier_rows = fr[["url_hash", "url", "seq", "state"]].to_dict("records")
+            frontier_rows = _kind("frontier")
             sess = DomainCrawlSession.rehydrate(
                 info,
                 web,
@@ -379,7 +375,7 @@ def _make_wave_fn(
         blocks.append(
             (1, {"row_kind": "domain_state", "state": phase, "state_json": sess.state_json()})
         )
-        return _assemble_out(domain, blocks)
+        return _out_table(domain, blocks)
 
     return wave_fn
 
@@ -390,6 +386,10 @@ OFFSETS_SCHEMA = T.StructType(
         T.StructField("offset_ms", T.LongType()),
     ]
 )
+
+# the replace tables' declared schemas: every read names its schema, so no
+# read runs Spark's footer-inference job
+_REPLACE_SCHEMAS = {"domain_state": DOMAIN_STATE_SCHEMA, "wave_offsets": OFFSETS_SCHEMA}
 
 
 def _make_offsets_fn():
@@ -469,7 +469,7 @@ class SparkCrawlEngine:
             )
         self.global_request_cap = global_request_cap
         self.conn_launches_per_wave = conn_launches_per_wave
-        # fetch transport for the wave UDF: None = the cogrouped pandas
+        # fetch transport for the wave UDF: None = the cogrouped pages
         # slice (hermetic default); {"kind": "http", "ports": {proto:
         # port}, "host": ...} = real sockets via sources/httpweb.HttpWeb
         # (executors dial the address — on a cluster this must be a
@@ -517,7 +517,7 @@ class SparkCrawlEngine:
                 # token-budget offsets (top_domain mode): ONE offset per
                 # domain for the whole run (latest replaced table), shifting
                 # the audit trail by the domain's semaphore-grant time
-                off = self.spark.read.parquet(*offp)
+                off = self.spark.read.schema(OFFSETS_SCHEMA).parquet(*offp)
                 v = (
                     v.join(F.broadcast(off), ["domain"], "left")
                     .withColumn(
@@ -538,42 +538,53 @@ class SparkCrawlEngine:
             bucket_paths = self.catalog.frontier_bucket_paths()
             if not bucket_paths:
                 return None
-            df = self.spark.read.parquet(*bucket_paths.values())
+            df = self.spark.read.schema(FRONTIER_SCHEMA).parquet(*bucket_paths.values())
             # the bucket partition column is re-derived (deterministic hash)
             return df.withColumn("bucket", self._bucket(F.col("domain")))
+        schema = _REPLACE_SCHEMAS[table]
         paths = self.catalog.paths(table)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
-    def _wave_view(self, table: str, cols: list, kind: Optional[str] = None) -> Optional[DataFrame]:
-        """row_kind-filtered view over the wave output log.
+    def _wave_log(self, manifest: dict) -> Optional[DataFrame]:
+        """The wave output log of a snapshot: its per-wave dirs unioned
+        with any compaction, read with the declared schema (no footer
+        inference).
 
         wave_out is written partitionBy(row_kind) under wave=NNNNNN dirs,
         so with basePath at the table root BOTH wave and row_kind are
-        Hive-style partition columns: the kind filter prunes whole
+        Hive-style partition columns: a row_kind filter prunes whole
         directories at planning time — a 10^4-wave run's fetch_log query
         opens only fetch_log files, not every wave's every kind.  A
         compaction snapshot (compact_wave_out) folds prior waves into one
-        row_kind-partitioned table that unions in here."""
-        paths = self.catalog.paths("wave_out")
-        cpaths = self.catalog.paths("wave_out_compacted")
-        if not paths and not cpaths:
-            return None
-        kind = kind or table
+        row_kind-partitioned table (wave as a data column)."""
+        paths = manifest["tables"].get("wave_out", [])
         parts = []
         if paths:
             parts.append(
-                self.spark.read.option(
-                    "basePath", os.path.join(self.out_dir, "wave_out")
-                ).parquet(*paths)
+                self.spark.read.schema(WAVE_LOG_SCHEMA)
+                .option("basePath", os.path.join(self.out_dir, "wave_out"))
+                .parquet(*paths)
             )
-        for p in cpaths:
-            parts.append(self.spark.read.option("basePath", p).parquet(p))
+        for p in manifest["tables"].get("wave_out_compacted", []):
+            parts.append(
+                self.spark.read.schema(WAVE_LOG_SCHEMA).option("basePath", p).parquet(p)
+            )
+        if not parts:
+            return None
         df = parts[0]
         for extra in parts[1:]:
             df = df.unionByName(extra)
-        return df.filter(F.col("row_kind") == kind).select(*cols)
+        return df
+
+    def _wave_view(self, table: str, cols: list, kind: Optional[str] = None) -> Optional[DataFrame]:
+        """row_kind-filtered view over the latest snapshot's wave output
+        log (``_wave_log``)."""
+        df = self._wave_log(self.catalog.load())
+        if df is None:
+            return None
+        return df.filter(F.col("row_kind") == (kind or table)).select(*cols)
 
     def read_table(self, table: str) -> Optional[DataFrame]:
         return self._read(table)
@@ -712,16 +723,20 @@ class SparkCrawlEngine:
         still groups by domain, so a giant top-domain's runnable members
         stay spread across tasks.
 
-        AQE partition coalescing is disabled for the wave jobs: it merges
-        shuffle partitions by *byte size*, and the wave groups are tiny in
-        bytes but heavy in compute (the per-domain crawl loop), so
-        coalescing collapses the whole wave into one task and serializes
-        the crawl.  Restored afterwards — for the scan/join/agg queries
-        AQE coalescing is exactly right.
+        Adaptive query execution is off for the wave jobs and restored
+        afterwards.  AQE runs each query stage as its own Spark job, so a
+        wave write under AQE costs one job per stage; without it, each
+        write is one job.  AQE would buy the wave nothing: its partition
+        coalescing merges shuffle partitions by *byte size*, and the wave
+        groups are tiny in bytes but heavy in compute (the per-domain
+        crawl loop), so coalescing would collapse the whole wave into one
+        task and serialize the crawl; its skew split applies only to
+        joins, never to the cogroup.  For the scan/join/agg queries
+        outside the wave, AQE is exactly right.
         """
         conf = self.spark.conf
-        key = "spark.sql.adaptive.coalescePartitions.enabled"
-        old_coalesce = conf.get(key, "true")
+        key = "spark.sql.adaptive.enabled"
+        old_aqe = conf.get(key, "true")
         conf.set(key, "false")
         try:
             return self._run_waves_inner(
@@ -729,7 +744,7 @@ class SparkCrawlEngine:
                 group_key, deadline_s,
             )
         finally:
-            conf.set(key, old_coalesce)
+            conf.set(key, old_aqe)
 
     def _run_waves_inner(
         self,
@@ -887,7 +902,7 @@ class SparkCrawlEngine:
                     "image_id",
                     "etag",
                     "last_modified",
-                    F.coalesce(F.col("lsh64").cast("long"), F.lit(0)).alias("lsh64"),
+                    F.col("lsh64").cast("long").alias("lsh64"),
                 )
                 left = left.unionByName(pc)
             if atags_df is not None:
@@ -931,7 +946,7 @@ class SparkCrawlEngine:
             out = (
                 left.groupby("domain")
                 .cogroup(pages_active.groupby("domain"))
-                .applyInPandas(wave_fn, WAVE_OUT_SCHEMA)
+                .applyInArrow(wave_fn, WAVE_OUT_SCHEMA)
             )
 
             # ONE physical write per wave: the unified output log,
@@ -945,8 +960,7 @@ class SparkCrawlEngine:
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
             _mark("cogroup crawl + wave_out write")
             table_paths: dict[str, Optional[str]] = {"wave_out": opath}
-            out_w = self.spark.read.parquet(opath)
-
+            out_w = self.spark.read.schema(WAVE_OUT_SCHEMA).parquet(opath)
 
             # frontier: per-bucket COW (Iceberg partition-overwrite).  Only
             # buckets containing an active domain are rewritten; rows of
@@ -1023,7 +1037,8 @@ class SparkCrawlEngine:
                 # scheduling would both violate the permits invariant and
                 # break per-domain clock monotonicity across waves.
                 durs = (
-                    self.spark.read.parquet(dpath)
+                    self.spark.read.schema(DOMAIN_STATE_SCHEMA)
+                    .parquet(dpath)
                     .select(
                         "top_domain",
                         "domain",
@@ -1069,16 +1084,7 @@ class SparkCrawlEngine:
         paths = manifest["tables"].get("wave_out", [])
         if not paths:
             return None  # nothing new to fold
-        parts = [
-            self.spark.read.option(
-                "basePath", os.path.join(self.out_dir, "wave_out")
-            ).parquet(*paths)
-        ]
-        for p in manifest["tables"].get("wave_out_compacted", []):
-            parts.append(self.spark.read.option("basePath", p).parquet(p))
-        df = parts[0]
-        for extra in parts[1:]:
-            df = df.unionByName(extra)
+        df = self._wave_log(manifest)
         snap = manifest["wave"] + 1
         cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
         df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)

@@ -2,18 +2,13 @@
 ContentTypeLogic.java:13-59) — arm coverage mirrors the reference's
 HttpFetcherImplContentTypeProbeTest."""
 
-import pandas as pd
-
 from marginaliasearch_spark.canon.url import EdgeUrl
 from marginaliasearch_spark.functions.contenttype import (
     is_allowable_content_type,
     is_url_like_binary,
 )
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
-from marginaliasearch_spark.sources.synthetic_web import (
-    DomainPagesWeb,
-    normalize_pages_pdf,
-)
+from marginaliasearch_spark.sources.synthetic_web import DomainPagesWeb
 
 NAME = "ctp.example.org"
 
@@ -49,9 +44,7 @@ def _session(rows):
         "last_modified": None, "body_text": None,
     }
     full = [{**base, **r, "url": f"https://{NAME}{r['path']}"} for r in rows]
-    web = DomainPagesWeb(
-        NAME, "https", normalize_pages_pdf(pd.DataFrame(full, dtype=object))
-    )
+    web = DomainPagesWeb(NAME, "https", full)
     return DomainCrawlSession(DomainInfo(domain=NAME, crawl_depth=100), web)
 
 

@@ -2,14 +2,9 @@
 HttpFetcherImpl.probeDomain:236-323): redirect hops, GET retry,
 https→http fallback, hop cap."""
 
-import pandas as pd
-
 from marginaliasearch_spark.canon.url import EdgeUrl
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
-from marginaliasearch_spark.sources.synthetic_web import (
-    DomainPagesWeb,
-    normalize_pages_pdf,
-)
+from marginaliasearch_spark.sources.synthetic_web import DomainPagesWeb
 
 NAME = "pw.example.org"
 
@@ -22,7 +17,7 @@ def _web(rows, proto="https"):
         "last_modified": None, "body_text": None,
     }
     full = [{**base, **r, "url": f"{proto}://{NAME}{r['path']}"} for r in rows]
-    return DomainPagesWeb(NAME, proto, normalize_pages_pdf(pd.DataFrame(full)))
+    return DomainPagesWeb(NAME, proto, full)
 
 
 def _session(web, proto="https"):

@@ -122,6 +122,28 @@ def test_single_wave_run_matches_oracle(spark, web_dfs, golden, tmp_path_factory
     _assert_matches_oracle(engine, golden)
 
 
+def _job_ids(spark) -> set:
+    # the status store is fed by the listener bus: drain it before reading
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def test_wave_job_count(spark, web_dfs, tmp_path_factory):
+    """A fresh one-wave crawl (no previous crawl, no atags, no caps)
+    submits at most 8 Spark jobs, counting the empty runnable-set check
+    that ends the run: per-wave fixed cost is measured in jobs, and a
+    change that adds one per wave must say so here."""
+    pages, domains, specs = web_dfs
+    out = str(tmp_path_factory.mktemp("crawl_jobs"))
+    engine = SparkCrawlEngine(spark, out, seed=SEED, n_buckets=8)
+    engine.init_run(domains, specs)
+    before = _job_ids(spark)
+    waves = engine.run_waves(pages, wave_budget=None)
+    jobs = len(_job_ids(spark) - before)
+    assert waves == 1
+    assert jobs <= 8, f"run_waves submitted {jobs} Spark jobs"
+
+
 def test_budgeted_waves_match_oracle(spark, web_dfs, golden, tmp_path_factory):
     pages, domains, specs = web_dfs
     out = str(tmp_path_factory.mktemp("crawl_waves"))
